@@ -24,7 +24,8 @@ real engine makes):
   (large-star/small-star family), giving O(log diameter) rounds instead
   of plain hash-min's O(diameter). Two shuffles per round on the node
   key; stop at fixpoint; lazy localCheckpoint truncates lineage and the
-  convergence count materializes it in one action (SURVEY.md §4).
+  convergence count materializes it in one action (SURVEY.md §4); the
+  caller frees the returned one with checkpoint.release.
 """
 
 from __future__ import annotations
@@ -33,6 +34,8 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .checkpoint import release
 
 DRIVER_MAX_EDGES = 1_000_000
 
@@ -219,14 +222,16 @@ def connected_components(
         # (truncating lineage) AND measures convergence in ONE action
         new_comp = new_comp.localCheckpoint(eager=False)
         n_changed = new_comp.where(F.col("changed")).count()
-        prop.unpersist()  # new_comp is materialized; the round's scratch can go
+        # new_comp is materialized: the round's scratch and the previous
+        # round's label table can go
+        release(prop, comp)
         comp = new_comp.drop("changed")
         if n_changed == 0:
             break
     else:
         # Unconverged components would silently split clusters; refuse to
         # return wrong labels (ADVICE r1).
-        sym.unpersist()
+        release(sym, comp)
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} "
             f"iterations ({n_changed} labels still changing); "
@@ -235,5 +240,5 @@ def connected_components(
 
     if stats is not None:
         stats.update(path="distributed", iterations=n_rounds)
-    sym.unpersist()
+    release(sym)
     return comp

@@ -16,7 +16,8 @@ expected-vs-completed work collapses to a directory existence + fingerprint
 check because parquet stage outputs are all-or-nothing (Spark's _SUCCESS
 commit protocol gives the atomicity the reference got from tmp+rename; on
 a real deployment the same class writes to Iceberg tables and gets
-snapshot-commit atomicity).
+snapshot-commit atomicity). StagePolicy picks this or in-memory stages
+per run; `release` frees what in-memory stages hold.
 """
 
 from __future__ import annotations
@@ -27,6 +28,7 @@ import os
 import time
 from collections.abc import Callable
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -134,3 +136,59 @@ class CheckpointManager:
 
     def metrics(self) -> DataFrame:
         return self.spark.read.parquet(self.metrics_path)
+
+
+def release(*frames: DataFrame) -> None:
+    """Free each frame's cache entry and, for a localCheckpoint (also seen
+    through column subsets such as ``drop``), the checkpointed RDD's
+    blocks, which ``DataFrame.unpersist()`` does not reach. Blocking, so
+    storage is back to its earlier level on return. Only release
+    checkpoints the caller owns."""
+    for df in frames:
+        df.unpersist(blocking=True)
+        plan = df._jdf.queryExecution().analyzed()
+        while plan.nodeName() == "Project" and plan.outputSet().subsetOf(
+            plan.child().outputSet()
+        ):
+            plan = plan.child()
+        if plan.nodeName() == "LogicalRDD":
+            plan.rdd().unpersist(True)
+
+
+class StagePolicy:
+    """How one link run materializes its stages, chosen once from
+    checkpoint_dir. With one, every stage is a resumable parquet
+    CheckpointManager stage. Without, a `cache` stage gets a serialized
+    MEMORY_AND_DISK persist and a `barrier` stage an eager localCheckpoint
+    (lineage truncated out of downstream plans; not recoverable on
+    executor loss, which in local mode loses the application anyway).
+    `scratch` takes caches that only feed the next barrier and is freed
+    once it materializes; `held` is what the run keeps until
+    `release(*held)`."""
+
+    def __init__(self, spark, checkpoint_dir, config, input_df=None):
+        self.ckpt = (
+            CheckpointManager(spark, checkpoint_dir, config, input_df)
+            if checkpoint_dir
+            else None
+        )
+        self.scratch: list[DataFrame] = []
+        self.held: list[DataFrame] = []
+
+    def stage(self, name, build, cache=False, barrier=False) -> DataFrame:
+        if self.ckpt is not None:
+            df = self.ckpt.stage(name, build)
+        elif barrier:
+            df = self.hold(build().localCheckpoint())
+        elif cache:
+            df = self.hold(build().persist(StorageLevel.MEMORY_AND_DISK))
+        else:
+            df = build()
+        if barrier:
+            release(*self.scratch)
+            self.scratch.clear()
+        return df
+
+    def hold(self, df: DataFrame) -> DataFrame:
+        self.held.append(df)
+        return df

@@ -12,9 +12,14 @@ physical together cost < 50 ms).
 Unresolved Column objects are immutable expression wrappers and are
 safely reusable across DataFrames and queries, so fragments that depend
 only on hashable config (window widths, hash counts, dims) are built
-once per JVM session and reused. The cache is keyed on the active
-SparkContext so a stop()/restart in one process can never leak stale
-py4j references into a new JVM.
+once per JVM session and reused. The fragments live on the active
+SparkContext object itself, so a stop()/restart in one process can never
+hand stale py4j references to a new JVM (an id()-keyed table could: CPython
+reuses ids), and they are dropped with their context.
+
+Arguments are positional only. Two threads building the same fragment at
+once may both build it; the last one stored wins, which is harmless since
+both are equal.
 """
 
 from __future__ import annotations
@@ -30,19 +35,17 @@ def session_cached(fn: Callable[..., T]) -> Callable[..., T]:
 
     args must be hashable; the returned value must be immutable/reusable
     (unresolved Columns and tuples of them are)."""
-    cache: dict = {}
 
     @functools.wraps(fn)
     def wrapped(*args):
         from pyspark import SparkContext
 
         sc = SparkContext._active_spark_context
-        key = (id(sc), args)
+        if sc is None:
+            return fn(*args)
+        cache = sc.__dict__.setdefault("_pelinker_fragments", {})
+        key = (fn, args)
         if key not in cache:
-            # drop fragments from dead sessions so a long-lived process
-            # that restarts Spark doesn't accumulate stale gateway refs
-            for k in [k for k in cache if k[0] != id(sc)]:
-                del cache[k]
             cache[key] = fn(*args)
         return cache[key]
 

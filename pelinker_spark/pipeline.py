@@ -17,6 +17,10 @@ one per CC iteration (on the far smaller surface-key graph), one to map
 components back onto mentions. The KB join is broadcast. Head-key skew is
 defused by the LSH per-bucket cap plus AQE skew-join splitting.
 
+Materialization is checkpoint.StagePolicy's: resumable parquet stages
+with a checkpoint_dir, else a cached mention table and localCheckpoint
+barriers at surfaces, pairs and edges, freed by LinkResult.unpersist().
+
 Reference lifecycle parity: stage A embed pipeline (pelinker/embedder.py:
 43-249) + stage B fit/cluster (pelinker/model.py:721-981) collapsed into
 one declarative DAG; the fitted-manifold clustering is replaced by CC over
@@ -32,7 +36,7 @@ from pyspark.sql import functions as F
 
 from .blocking import compact_key_pairs, lsh_candidate_pairs
 from .cc import connected_components
-from .checkpoint import CheckpointManager
+from .checkpoint import StagePolicy, release
 from .extract import extract_text
 from .mentions import generate_mentions, kb_blocking_keys
 from .metrics import pairwise_prf
@@ -82,9 +86,6 @@ class LinkConfig:
     # fused vector (= mean of per-source cosines for unit parts), the
     # model-selection fused re-evaluation path (runner.py:584-812).
     encoder_variants: tuple[str, ...] = ("default",)
-    # eager barrier after the surface groupBy (see link_pipeline); off only
-    # for plan-shape experiments — was a module-global test hook before
-    surface_barrier: bool = True
     # incremental-state bucketing fanout: buckets/ and compact/ state is
     # partitioned by pmod(xxhash64(bh|ck), state_prefixes) so a
     # micro-batch's history probe prunes at the FILE SOURCE (only
@@ -115,16 +116,13 @@ class LinkResult:
     edges: DataFrame
     components: DataFrame
     clusters: DataFrame  # mention-level rows with cluster_id (+entity_id)
-    _persisted: list = field(default_factory=list)
+    _held: list = field(default_factory=list)  # StagePolicy.held
 
     def unpersist(self) -> None:
-        """Release every DataFrame this run cached (repeat runs in one
-        session would otherwise accumulate storage)."""
-        for df in [self.mentions, self.surfaces, self.edges, *self._persisted]:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+        """Free every cache and local checkpoint the run holds; in-memory
+        outputs are unusable afterwards."""
+        release(*self._held)
+        self._held.clear()
 
     def public_view(self) -> DataFrame:
         """P7 public output projection (sinks.public_projection)."""
@@ -305,24 +303,7 @@ def link_pipeline(
     checkpoint_dir: str | None = None,
 ) -> LinkResult:
     cfg = cfg or LinkConfig()
-    ckpt = (
-        CheckpointManager(spark, checkpoint_dir, cfg.as_dict(), input_df=pages)
-        if checkpoint_dir
-        else None
-    )
-
-    def stage(name, build, persist=False, storage=None):
-        if ckpt:
-            return ckpt.stage(name, build)
-        df = build()
-        if persist:
-            # lazy persist: outputs consumed by more than one downstream
-            # scan are cached, but NOT eagerly counted — the pipeline runs
-            # as ONE job wave up to the edge barrier below, so Catalyst/AQE
-            # optimize the full DAG and there are no serial per-stage
-            # barriers capping strong scaling (round-1 lesson).
-            df = df.persist(storage) if storage is not None else df.persist()
-        return df
+    stages = StagePolicy(spark, checkpoint_dir, cfg.as_dict(), input_df=pages)
 
     # language pruning BEFORE extraction: generate_mentions repeats this
     # filter (harmlessly), but with the extract UDF now non-deterministic
@@ -332,57 +313,26 @@ def link_pipeline(
     src = pages
     if cfg.lang is not None and "lang" in pages.columns:
         src = pages.where(F.col("lang") == cfg.lang)
-    docs = stage("extract", lambda: extract_stage(src))
+    docs = stages.stage("extract", lambda: extract_stage(src))
     # the mention table is the largest intermediate (|mentions| ~ 100x
-    # |pages|); cache it SERIALIZED so holding it through the pair/score
+    # |pages|); cached SERIALIZED so holding it through the pair/score
     # stages doesn't evict their execution memory (measured: deserialized
-    # caching at 320k pages slowed the pair stage ~2x via memory pressure)
-    from pyspark import StorageLevel
-
-    mentions = stage(
-        "mentions", lambda: generate_mentions(docs, cfg.windows, cfg.lang),
-        persist=True,
-        storage=StorageLevel.MEMORY_AND_DISK,
+    # caching at 320k pages slowed the pair stage ~2x via memory pressure).
+    # The cache is lazy: the surfaces barrier below fills it.
+    mentions = stages.stage(
+        "mentions",
+        lambda: generate_mentions(docs, cfg.windows, cfg.lang),
+        cache=True,
     )
-    _COMPRESS_KEY = "spark.sql.inMemoryColumnarStorage.compressed"
-    if not ckpt and cfg.surface_barrier:
-        # barrier 1 of 2, as a localCheckpoint (round 6): the surface
-        # table is scanned by three independent downstream branches (LSH
-        # channel, compact-channel probe, compact-channel build) and its
-        # lineage — the full synth/extract/mention expression forest —
-        # was otherwise re-walked by Catalyst/AQE for EVERY downstream
-        # query (event-log receipt: ~2s driver gap before the edges wave
-        # and ~1.7s before the final wave, pure planning). Eagerly
-        # materializing AND truncating to a leaf here removes that
-        # planning tax (measured −3.5s per 40k link run, identical
-        # clusters), materializes once so the branches can't race a cold
-        # cache, and warms the mentions cache (the groupBy's map side)
-        # for the final cluster-assignment join. Fault-tolerance of this
-        # intermediate is not needed (guide §5): losing an executor
-        # locally means losing the app anyway, and the checkpointed RDD
-        # is freed by the context cleaner when the result is dropped.
-        surfaces = stage("surfaces", lambda: surface_table(mentions))
-        surfaces = surfaces.localCheckpoint()
-    else:
-        # checkpoint-manager mode (parquet-backed stages) or explicit
-        # barrier opt-out: keep the cached-plan shape. The surface cache
-        # is built UNCOMPRESSED per the r5 receipt (the lz4 columnar pass
-        # dominated the stage: 54.2s vs 18.6s at 320k pages; the table is
-        # small relative to mentions). Spark captures this conf per
-        # persist() call, which is what makes per-table scoping possible.
-        _prev_compress = spark.conf.get(_COMPRESS_KEY, "true")
-        spark.conf.set(_COMPRESS_KEY, "false")
-        try:
-            surfaces = stage(
-                "surfaces",
-                lambda: surface_table(mentions),
-                persist=True,
-                storage=StorageLevel.MEMORY_AND_DISK,
-            )
-        finally:
-            spark.conf.set(_COMPRESS_KEY, _prev_compress)
-
-    registry: list = []
+    # barrier 1 of 3 (round 6): three downstream branches scan surfaces
+    # (LSH channel, compact probe, compact build), and each re-walked its
+    # whole extract/mention lineage in Catalyst/AQE (~2s + ~1.7s driver
+    # gaps, pure planning). Truncating to a leaf here removes that tax
+    # (−3.5s per 40k link run, identical clusters) and warms the mentions
+    # cache for the final cluster-assignment join.
+    surfaces = stages.stage(
+        "surfaces", lambda: surface_table(mentions), barrier=True
+    )
 
     def build_pairs():
         from .blocking import has_nonkey_chars
@@ -404,7 +354,7 @@ def link_pipeline(
             bands=cfg.lsh_bands,
             rows=cfg.lsh_rows,
             max_block=cfg.max_block,
-            registry=registry,
+            registry=stages.scratch,
             hot_bucket_mode=cfg.hot_bucket_mode,
             stop_block=cfg.lsh_stop_block,
             hot_salts=cfg.lsh_hot_salts,
@@ -413,7 +363,7 @@ def link_pipeline(
             compact_key_pairs(
                 surfaces,
                 max_block=cfg.compact_max_block,
-                registry=registry,
+                registry=stages.scratch,
                 dedup=False,
             )
         )
@@ -422,50 +372,25 @@ def link_pipeline(
         # difference to ~max/4 — both pure column predicates
         return prefilter_pairs(raw).dropDuplicates(["key_a", "key_b"])
 
-    pairs = stage("pairs", build_pairs)
-    if not ckpt:
-        # third leaf barrier (round 6): the candidate-pair table is tiny
-        # (bounded by the blocking caps) and its dedup exchange is already
-        # a full materialization point, so checkpointing here loses no
-        # stage overlap — but it truncates the LSH/compact forest out of
-        # every scoring-side plan, and in particular out of the TWO
-        # persist() calls in score_pairs, each of which otherwise
-        # physical-plans the whole forest on the driver (measured ~1 s of
-        # pure driver time per link call at steady state).
-        pairs = pairs.localCheckpoint()
-        # the channel internals (bucketed, hit) are only consumed by the
-        # pair build; with pairs materialized they can be released now
-        # rather than after the edge wave
-        for df in registry:
-            df.unpersist()
-        registry.clear()
+    # barrier 2 of 3 (round 6): the pair table is small and its dedup
+    # exchange already a full materialization point, so no stage overlap
+    # is lost; it truncates the LSH/compact forest out of the scoring
+    # plans, whose two persist() calls each physical-plan it on the
+    # driver otherwise (~1 s per call). Frees the channel scratch.
+    pairs = stages.stage("pairs", build_pairs, barrier=True)
 
     def build_edges():
-        scored = score_pairs(pairs, cfg, registry=registry)
+        scored = score_pairs(pairs, cfg, registry=stages.scratch)
         return scored.where(F.col("cos") >= cfg.cos_threshold).select(
             "key_a", "key_b", "jw", "cos"
         )
 
-    n_edges = None
-    if ckpt:
-        # checkpoint-manager mode: parquet-backed stage, already a leaf
-        edges = stage("edges", build_edges, persist=True)
-    else:
-        # the ONE eager barrier, as a localCheckpoint (round 6, same
-        # rationale as the surface barrier): materializing edges runs the
-        # whole extract→mentions→surfaces→pairs→score chain as a single
-        # job wave (populating every cache above). Checkpointing rather
-        # than persist+count truncates the score_pairs expression forest
-        # (pair channels + two UDF joins) out of the THREE downstream
-        # plans that re-embed edges (components, incident scores, cluster
-        # assignment), which Catalyst otherwise re-canonicalizes per
-        # query; the count on the checkpointed leaf is then metadata-cheap
-        # and still feeds connected_components' strategy probe.
-        edges = stage("edges", build_edges).localCheckpoint()
-        n_edges = edges.count()
-    for df in registry:
-        df.unpersist()
-    registry.clear()
+    # barrier 3 of 3: keeps the score_pairs forest (pair channels + two
+    # UDF joins) out of the THREE downstream plans that re-embed edges
+    # (components, incident scores, cluster assignment), which Catalyst
+    # otherwise re-canonicalizes per query; a count on the leaf is then
+    # cheap and feeds connected_components' strategy probe.
+    edges = stages.stage("edges", build_edges, barrier=True)
 
     # CC is shared by the components artifact and the cluster assignment;
     # memoized so checkpoint-resume paths don't run it twice.
@@ -478,8 +403,10 @@ def link_pipeline(
                 "key_a",
                 "key_b",
                 driver_max_edges=cfg.cc_driver_max_edges,
-                n_edges=n_edges,
+                n_edges=edges.count(),
             )
+            # the distributed path returns a localCheckpoint
+            stages.hold(comp_memo["df"])
         return comp_memo["df"]
 
     def build_components():
@@ -493,7 +420,7 @@ def link_pipeline(
             )
         )
 
-    components = stage("components", build_components)
+    components = stages.stage("components", build_components)
 
     def build_clusters():
         # mentions already carry the blocking key, so cluster assignment is
@@ -554,7 +481,7 @@ def link_pipeline(
             m = m.join(F.broadcast(anchor), "cluster_id", "left")
         return m
 
-    clusters = stage("clusters", build_clusters)
+    clusters = stages.stage("clusters", build_clusters)
 
     return LinkResult(
         mentions=mentions,
@@ -562,6 +489,7 @@ def link_pipeline(
         edges=edges,
         components=components,
         clusters=clusters,
+        _held=stages.held,
     )
 
 

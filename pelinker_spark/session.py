@@ -13,6 +13,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_mem(host_bytes: int) -> str:
+    """Half the host's RAM in whole GB, within [1g, 24g]: a local driver
+    JVM sized near host RAM is OOM-killed before it collects garbage."""
+    return f"{max(1, min(24, host_bytes // 2 // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "pelinker_spark",
     cores: int | None = None,
@@ -24,6 +30,7 @@ def get_spark(
     cores: local[N] thread count; default $SPARK_GRAFT_CPUS or 32.
     shuffle_partitions: default = cores (local mode: more just adds task
     scheduling overhead; on a real cluster this scales with executors).
+    Driver heap: $SPARK_GRAFT_DRIVER_MEM, else default_driver_mem.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -75,7 +82,13 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "5000")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or default_driver_mem(
+                os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+            ),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.python.daemon.module", "pelinker_spark.worker_daemon")

@@ -158,8 +158,8 @@ def incremental_link_batch(
     batch_id: int = 0,
 ) -> None:
     """Score ONE micro-batch of never-seen surface keys against the
-    accumulated key state (VERDICT r2 #6 — the consumer of the
-    streaming_first_seen feed).
+    accumulated key state (VERDICT r2 #6 — the consumer of
+    run_incremental_link's first-seen feed).
 
     Incremental blocking invariant: a candidate pair's LATER endpoint is
     new exactly once, so joining the new keys' bucket/compact rows against
@@ -191,6 +191,7 @@ def incremental_link_batch(
     the batch's blocking neighborhood, not to total accumulated state
     (receipts: tools/incremental_bench.py scanned-vs-history rows).
     """
+    from .checkpoint import release
     from .pipeline import LinkConfig, score_pairs
 
     cfg = cfg or LinkConfig()
@@ -204,13 +205,14 @@ def incremental_link_batch(
     nk = new_keys.select("key").dropDuplicates(["key"]).persist()
     _write_incremental_state(nk, out_dir, cfg, batch_id)
     pairs = incremental_candidate_pairs(spark, out_dir, cfg, batch_id)
+    scratch: list = []
     edges = (
-        score_pairs(pairs, cfg)
+        score_pairs(pairs, cfg, registry=scratch)
         .where(F.col("cos") >= cfg.cos_threshold)
         .select("key_a", "key_b", "jw", "cos")
     )
     _write_batch(edges, f"{out_dir}/edges", batch_id)
-    nk.unpersist()
+    release(nk, *scratch)
 
 
 def _write_incremental_state(
@@ -841,7 +843,6 @@ def run_incremental_link(
     lang: str | None = "en",
     cfg=None,
     max_files_per_trigger: int = 8,
-    use_stateful_first_seen: bool = False,
     compact_every: int | None = None,
 ) -> None:
     """Two CHAINED streaming queries, each with its own checkpoint
@@ -857,22 +858,15 @@ def run_incremental_link(
          accumulated key state (incremental_link_batch) — batch 2 never
          re-scores batch 1's vocabulary.
 
-    First-seen dedup has two implementations with identical semantics
-    (a key scores exactly once, in the first batch where it appears;
-    both survive restarts):
-
-      - default: anti-join the batch's keys against the accumulated
-        bucket state, strictly-older partitions only (`batch_id <
-        current`, so an ingest-replay of the current partition stays
-        idempotent). The on-disk state the scorer already maintains IS
-        the seen-set — pure JVM column algebra, no second state store.
-      - use_stateful_first_seen=True: route through
-        streaming_first_seen (applyInPandasWithState). Same output;
-        measured 40x slower end-to-end at 40k pages / 5 drops (1405s vs
-        34.7s batch — per-KEY pandas groups put every mention row
-        through a Python state call). Kept as the §2.10 stateful-
-        operator showcase and for sinks that need the (key, first_seen,
-        n_first_batch) feed itself.
+    First-seen dedup (a key scores exactly once, in the first batch where
+    it appears, across restarts) anti-joins the batch's keys against the
+    accumulated bucket state, strictly-older partitions only (`batch_id <
+    current`, so an ingest-replay of the current partition stays
+    idempotent). The on-disk state the scorer already maintains IS the
+    seen-set — pure JVM column algebra, no second state store. (The
+    applyInPandasWithState feed, streaming_first_seen, gives the same
+    keys but measured 40x slower here: per-KEY pandas groups put every
+    mention row through a Python state call.)
 
     CC + cluster assignment then run as a periodic batch job
     (finalize_incremental_link).
@@ -926,49 +920,38 @@ def run_incremental_link(
         .parquet(f"{out_dir}/mentions")
     )
 
-    if use_stateful_first_seen:
-
-        def score_new(batch_df: DataFrame, batch_id: int) -> None:
-            incremental_link_batch(spark, batch_df, out_dir, cfg, batch_id)
-            _maybe_compact(batch_id)
-
-        source = streaming_first_seen(mention_stream)
-    else:
-
-        def score_new(batch_df: DataFrame, batch_id: int) -> None:
-            nk = batch_df.select("key").dropDuplicates(["key"])
-            if _fs_exists(spark, f"{out_dir}/buckets"):
-                # every key has exactly ONE band-0 row, so the band filter
-                # makes this a one-row-per-seen-key, key-column-pruned scan
-                # (row-group stats prune the other bands) instead of a
-                # bands-times-larger read per micro-batch
-                seen = (
-                    spark.read.parquet(f"{out_dir}/buckets")
-                    .where(
-                        (F.col("batch_id") < F.lit(batch_id))
-                        & (F.col("band") == 0)
-                    )
-                    .select("key")
+    def score_new(batch_df: DataFrame, batch_id: int) -> None:
+        nk = batch_df.select("key").dropDuplicates(["key"])
+        if _fs_exists(spark, f"{out_dir}/buckets"):
+            # every key has exactly ONE band-0 row, so the band filter
+            # makes this a one-row-per-seen-key, key-column-pruned scan
+            # (row-group stats prune the other bands) instead of a
+            # bands-times-larger read per micro-batch
+            seen = (
+                spark.read.parquet(f"{out_dir}/buckets")
+                .where(
+                    (F.col("batch_id") < F.lit(batch_id))
+                    & (F.col("band") == 0)
                 )
-                # Inverted probe (VERDICT r4 #1): the accumulated history
-                # is SCANNED but never SHUFFLED. A plain nk ⟕̸ seen
-                # anti-join sort-merges, shuffling every key EVER seen on
-                # every micro-batch — O(history) per batch. Instead
-                # semi-join the history against the (batch-sized, always
-                # broadcastable) new-key set map-side, yielding an
-                # "already seen" set no larger than the batch, then
-                # anti-join the batch against THAT, also broadcast. Both
-                # joins are BroadcastHashJoin; per-batch shuffle volume is
-                # O(batch), independent of accumulated state size.
-                already = seen.join(F.broadcast(nk), "key", "left_semi")
-                nk = nk.join(F.broadcast(already), "key", "left_anti")
-            incremental_link_batch(spark, nk, out_dir, cfg, batch_id)
-            _maybe_compact(batch_id)
-
-        source = mention_stream
+                .select("key")
+            )
+            # Inverted probe (VERDICT r4 #1): the accumulated history
+            # is SCANNED but never SHUFFLED. A plain nk ⟕̸ seen
+            # anti-join sort-merges, shuffling every key EVER seen on
+            # every micro-batch — O(history) per batch. Instead
+            # semi-join the history against the (batch-sized, always
+            # broadcastable) new-key set map-side, yielding an
+            # "already seen" set no larger than the batch, then
+            # anti-join the batch against THAT, also broadcast. Both
+            # joins are BroadcastHashJoin; per-batch shuffle volume is
+            # O(batch), independent of accumulated state size.
+            already = seen.join(F.broadcast(nk), "key", "left_semi")
+            nk = nk.join(F.broadcast(already), "key", "left_anti")
+        incremental_link_batch(spark, nk, out_dir, cfg, batch_id)
+        _maybe_compact(batch_id)
 
     q2 = (
-        source.writeStream.foreachBatch(score_new)
+        mention_stream.writeStream.foreachBatch(score_new)
         .option("checkpointLocation", f"{checkpoint_dir}/score")
         .trigger(availableNow=True)
         .start()

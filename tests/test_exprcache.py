@@ -57,3 +57,28 @@ def test_gated_jw_udf_object_cached(spark):
     from pelinker_spark.scoring import _jaro_winkler
 
     assert abs(val - _jaro_winkler("martha", "marhta")) < 1e-12
+
+
+def test_fragments_never_cross_contexts(monkeypatch):
+    """Fragments live on their SparkContext: a second live context never
+    sees the first one's, and switching back finds them again."""
+    from pyspark import SparkContext
+
+    from pelinker_spark.exprcache import session_cached
+
+    class StandInContext:
+        pass
+
+    @session_cached
+    def frag(x):
+        return object()
+
+    one, two = StandInContext(), StandInContext()
+    monkeypatch.setattr(SparkContext, "_active_spark_context", one)
+    f_one = frag(1)
+    monkeypatch.setattr(SparkContext, "_active_spark_context", two)
+    f_two = frag(1)
+    assert f_two is not f_one
+    assert frag(1) is f_two
+    monkeypatch.setattr(SparkContext, "_active_spark_context", one)
+    assert frag(1) is f_one

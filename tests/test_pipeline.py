@@ -200,6 +200,42 @@ def test_connected_components_log_rounds_on_deep_chain(spark):
     assert len(out) == 301
 
 
+def test_distributed_cc_frees_its_rounds(spark, stored_rdds):
+    """Each round's label table is a local checkpoint; every round frees
+    the previous one, so once the returned frame is released (and after
+    an unconverged raise) storage is back to its pre-call level."""
+    import pytest
+
+    from pelinker_spark.checkpoint import release
+
+    chain = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(300)]
+    df = spark.createDataFrame(pd.DataFrame(chain, columns=["src", "dst"]))
+    before = stored_rdds()
+    out = connected_components(df, driver_max_edges=0, max_iter=14)
+    assert out.count() == 301
+    release(out)
+    assert set(stored_rdds()) - set(before) == set()
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(df, driver_max_edges=0, max_iter=2)
+    assert set(stored_rdds()) - set(before) == set()
+
+
+def test_release_frees_only_checkpoints_it_reaches(spark, stored_rdds):
+    """release() sees a local checkpoint through a column subset (drop)
+    but not through a projection that computes columns."""
+    from pelinker_spark.checkpoint import release
+
+    before = stored_rdds()
+    base = spark.range(0, 1000).withColumn("x", F.col("id") * 2)
+    base = base.localCheckpoint()
+    derived = base.withColumn("y", F.col("x") + 1)
+    release(derived)
+    assert set(stored_rdds()) - set(before)
+    assert derived.count() == 1000
+    release(base.drop("x"))
+    assert set(stored_rdds()) - set(before) == set()
+
+
 def test_lsh_finds_typo_pairs(spark):
     surfaces = spark.createDataFrame(
         pd.DataFrame(
@@ -301,3 +337,18 @@ def test_link_scores_flag_off(spark):
     finally:
         full.unpersist()
         bare.unpersist()
+
+
+def test_unpersist_frees_run_storage(spark, stored_rdds):
+    """In-memory mode: once clusters is materialized and the result is
+    released, none of the run's caches or local checkpoints (mentions,
+    surfaces, pairs, edges, blocking and scoring scratch) is left."""
+    pages = web_pages(spark, 300, seed=5, n_entities=25, partitions=4)
+    before = stored_rdds()
+    res = link_pipeline(spark, pages, cfg=LinkConfig())
+    assert res.clusters.count() > 0
+    assert set(stored_rdds()) - set(before), "the run holds its stages"
+    res.unpersist()
+    after = stored_rdds()
+    assert set(after) - set(before) == set(), after
+    assert sum(after.values()) <= sum(before.values())
