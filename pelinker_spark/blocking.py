@@ -13,10 +13,11 @@ minhash via xxhash64 with per-hash seeds + array_min, bands via hashing
 minhash slices — no Python, no ml.feature stage (those require Vector
 columns and a fit step; this formulation is stateless and streams).
 
-Skew: head surface-form keys (stopword-ish unigrams) produce giant blocks.
-Defused by (a) per-band block cap via row_number over a deterministic
-xxhash64 order — the reference's per-entity cap W1 (pelinker/sampling.py:
-101-153) re-expressed, and (b) AQE skew-join splitting for the joins.
+Both channels, batch and incremental, enumerate in-block pairs through
+one operator, `block_pairs`. Skew: head surface-form keys (stopword-ish
+unigrams) produce giant blocks; `block_pairs` drops blocks over a size cap
+whole, and the LSH channel's "salt" mode enumerates mid-sized ones with
+salted repartitioning (`salted_block_pairs`, `salted_cross_pairs`).
 """
 
 from __future__ import annotations
@@ -27,6 +28,11 @@ from pyspark.sql import functions as F
 from .exprcache import session_cached
 
 _KEY_ALPHABET = "abcdefghijklmnopqrstuvwxyz0123456789 "
+
+
+def check_hot_bucket_mode(mode: str) -> None:
+    if mode not in ("drop", "salt"):
+        raise ValueError(f"hot_bucket_mode must be 'drop' or 'salt', got {mode!r}")
 
 
 def has_nonkey_chars(key: Column) -> Column:
@@ -79,7 +85,8 @@ def minhash_signatures_agg(
     shuffle carries |keys| rows, not |keys|x|shingles|.
 
     Returns (key, mh0..mh{num_hashes-1})."""
-    assert num_hashes <= len(_MH_A)
+    if num_hashes > len(_MH_A):
+        raise ValueError(f"num_hashes must be <= {len(_MH_A)}, got {num_hashes}")
     c_prep, c_sh, aggs = _mh_cols(key_col, num_hashes, n)
     # explode an integer sequence, then scalar substring — building the
     # shingle array with a transform() lambda would run interpreted per
@@ -123,7 +130,10 @@ def lsh_buckets(
     string alone, so bucket ids computed incrementally (per streaming
     batch) are IDENTICAL to a batch run — the property the incremental
     blocking path relies on (streaming.incremental_link_batch)."""
-    assert num_hashes >= bands * rows
+    if num_hashes < bands * rows:
+        raise ValueError(
+            f"num_hashes ({num_hashes}) must be >= bands*rows ({bands * rows})"
+        )
     sig = minhash_signatures_agg(keys.select(key_col), key_col, num_hashes)
     c_band, c_post = _band_cols(key_col, bands, rows)
     return sig.select(*c_band).select(*c_post)
@@ -169,18 +179,15 @@ def lsh_candidate_pairs(
     """Distinct-surface table → candidate pairs (key_a, key_b), key_a < key_b.
 
     surfaces must have one row per distinct `key_col`. Pairs are generated
-    within LSH buckets; buckets larger than max_block are handled per
+    within LSH buckets by block_pairs, which shuffles once on the bucket id
+    (band, bh); buckets larger than max_block are handled per
     hot_bucket_mode (below) so a degenerate bucket can't put its quadratic
-    pair work on one reduce task. Self-joins use the (band, bh) equi-key,
-    so Catalyst shuffles once on the bucket id.
+    pair work on one reduce task.
 
     hot_bucket_mode:
       "drop" (default) — oversized buckets are stop-buckets
-        (low-information, quadratic-pair risk) and are skipped outright: a
-        hash aggregate + semi join, cheaper and more skew-robust than a
-        global sort-based per-bucket cap. The reference's cap discipline
-        (sampling.py:101-153) survives in cap_group_rows for callers that
-        need exact-k retention.
+        (low-information, quadratic-pair risk), dropped whole by
+        block_pairs.
       "salt" — buckets in (max_block, stop_block] keep ALL their pairs,
         enumerated via salted_block_pairs (triangle partitioning: the
         bucket's n² pairs spread over hot_salts(hot_salts+1)/2 shuffle
@@ -190,60 +197,24 @@ def lsh_candidate_pairs(
         belongs to the other blocking channels. Trades bounded extra
         compute for recall on mid-sized head blocks.
     """
-    assert hot_bucket_mode in ("drop", "salt")
+    check_hot_bucket_mode(hot_bucket_mode)
     bucketed = lsh_buckets(surfaces, key_col, num_hashes, bands, rows)
-    # word grouping, computed ONCE per bucket-membership row (round 6):
-    # the WordGrouping blocking dimension (pelinker/onto.py:247-252 — an
-    # n-word surface never links to an m-word surface) used to be a
-    # post-join filter running size(split(...)) on BOTH sides of every
-    # generated pair row (~2x|raw pairs| regex splits); deriving it here
-    # and joining on it instead produces the exact same pair set while
-    # never generating the cross-width pairs at all. Bucket-size caps
-    # still count the whole (band, bh) bucket, as before.
-    bucketed = bucketed.withColumn(
-        "wg", F.size(F.split(F.col(key_col), " "))
-    )
     # the bucket table feeds both the size aggregation and the semi-join
     # probe (and the hot path in salt mode) — without materialization the
     # minhash lineage recomputes up to 3x
     bucketed = bucketed.persist()
     if registry is not None:
         registry.append(bucketed)
-    sizes = bucketed.groupBy("band", "bh").agg(F.count("*").alias("bn"))
-    cold = bucketed.join(
-        sizes.where(F.col("bn") <= max_block).select("band", "bh"),
-        ["band", "bh"],
-        "left_semi",
-    )
-    # In-bucket pair enumeration via ONE groupBy + in-row double explode
-    # (round 6): collecting each capped bucket's members into an array and
-    # expanding pairs row-side replaces the (a x b) self-join — two
-    # exchanges of the full bucket-membership table plus a hash join —
-    # with a single exchange and codegen'd explodes. Safe by construction:
-    # only buckets already capped to max_block rows are collected, so no
-    # aggregation buffer can exceed max_block entries regardless of how
-    # degenerate a raw bucket is (giant buckets were excluded by the
-    # semi join above, exactly as before). Pair set is identical
-    # (parity-verified against the self-join form, both hot modes).
-    g = cold.groupBy("band", "bh").agg(
-        F.collect_list(F.struct("wg", F.col(key_col).alias("k"))).alias("ms")
-    )
-    raw = (
-        g.select(F.explode("ms").alias("x"), "ms")
-        .select("x", F.explode("ms").alias("y"))
-        .where(
-            (F.col("x.wg") == F.col("y.wg")) & (F.col("x.k") < F.col("y.k"))
-        )
-        .select(F.col("x.k").alias("key_a"), F.col("y.k").alias("key_b"))
-    )
+    raw = block_pairs(bucketed, ["band", "bh"], key_col, max_block=max_block)
     if hot_bucket_mode == "salt":
         stop = stop_block if stop_block is not None else max_block * 40
+        sizes = bucketed.groupBy("band", "bh").agg(F.count("*").alias("__n"))
         hot = bucketed.join(
-            sizes.where((F.col("bn") > max_block) & (F.col("bn") <= stop))
+            sizes.where((F.col("__n") > max_block) & (F.col("__n") <= stop))
             .select("band", "bh"),
             ["band", "bh"],
             "left_semi",
-        )
+        ).withColumn("wg", word_count(F.col(key_col)))
         raw = raw.unionByName(
             salted_block_pairs(
                 hot, ["band", "bh", "wg"], key_col, hot_salts
@@ -263,56 +234,93 @@ def compact_key_pairs(
     """Deterministic third blocking channel: surfaces whose keys become
     equal after stripping intra-token punctuation ("acti-vate" ≡
     "activate") are candidates. Catches OCR/hyphenation typos with
-    probability 1 where LSH is probabilistic; one groupBy-shaped shuffle.
-    Same per-block cap discipline as the LSH channel."""
-    # translate-gated: punctuation detection is a char-map walk over all
-    # surfaces; the removal regex only ever runs on the punctuated minority
-    df = surfaces.select(key_col).where(has_nonkey_chars(F.col(key_col)))
-    df = df.select(
-        key_col,
-        F.regexp_replace(F.col(key_col), "[^a-z0-9 ]", "").alias("ck"),
-    ).where(F.col("ck") != F.col(key_col))
-    compact = compact_form(F.col(key_col))
-    # pair each punctuated variant with every surface sharing its compact
-    # form (including the canonical un-punctuated one, if present).
-    #
+    probability 1 where LSH is probabilistic. A compact group is a block
+    of block_pairs (one shuffle on the compact form) whose pairs must
+    include a punctuated key; same per-block cap discipline as the LSH
+    channel."""
+    k = F.col(key_col)
     # Plan shape matters at scale: punctuated variants are a small minority
     # of surfaces, so probe the FULL surface table with a broadcast semi
     # join on their compact forms first — the |surfaces|-sized side is
     # scanned once and never shuffled (measured 16.2s → ~2s at 2M surfaces
-    # vs the groupBy-everything formulation). Group sizes for the
-    # stop-group cap are then counted on the tiny hit set; membership is
-    # identical because a group with no punctuated variant yields no pairs.
-    # no distinct() on the probe: a semi join ignores probe multiplicity,
-    # and the distinct was one more exchange + stage on the hot path; the
-    # broadcast simply carries the (small) punctuated-variant multiset
-    probe = df.select("ck")
-    allk = surfaces.select(F.col(key_col).alias("key_b"), compact.alias("ck"))
-    hit = allk.join(F.broadcast(probe), "ck", "left_semi").persist()
+    # vs the groupBy-everything formulation); a group with no punctuated
+    # variant yields no pairs. The probe is translate-gated (the regex
+    # runs on the punctuated minority only) and has no distinct(): a semi
+    # join ignores probe multiplicity, and the distinct was one more
+    # exchange + stage on the hot path.
+    probe = surfaces.where(has_nonkey_chars(k)).select(
+        F.regexp_replace(k, "[^a-z0-9 ]", "").alias("ck")
+    )
+    hit = (
+        surfaces.select(k, compact_form(k).alias("ck"))
+        .join(F.broadcast(probe), "ck", "left_semi")
+        .withColumn("punct", has_nonkey_chars(k))
+        .persist()
+    )
     if registry is not None:
         registry.append(hit)
-    # Oversized compact groups are dropped whole (stop-group discipline,
-    # same as LSH hot buckets — a hash aggregate, not a global sort).
-    sizes = hit.groupBy("ck").agg(F.count("*").alias("gn"))
-    allk = hit.join(
-        sizes.where(F.col("gn") <= max_block).select("ck"), "ck", "left_semi"
-    )
-    out = (
-        df.withColumnRenamed(key_col, "key_x")
-        .join(allk, "ck")
-        .where(F.col("key_x") != F.col("key_b"))
-        .select(
-            F.least("key_x", "key_b").alias("key_a"),
-            F.greatest("key_x", "key_b").alias("key_b"),
-        )
-        .where(
-            F.size(F.split(F.col("key_a"), " "))
-            == F.size(F.split(F.col("key_b"), " "))
-        )
+    out = block_pairs(
+        hit, ["ck"], key_col, max_block=max_block, any_of=("punct",)
     )
     # dedup=False: see lsh_candidate_pairs — the pipeline's union-level
     # dropDuplicates makes this channel-local shuffle redundant
     return out.dropDuplicates(["key_a", "key_b"]) if dedup else out
+
+
+def word_count(key: Column) -> Column:
+    """Words in a key — the WordGrouping blocking dimension
+    (pelinker/onto.py:247-252: an n-word surface never links to an m-word
+    surface)."""
+    return F.size(F.split(key, " "))
+
+
+def block_pairs(
+    members: DataFrame,
+    block_cols: list[str],
+    key_col: str = "key",
+    max_block: int | None = None,
+    any_of: tuple[str, ...] = (),
+) -> DataFrame:
+    """Every pair (key_a, key_b), key_a < key_b, of equal word count inside
+    each block of a membership table (one row per key per block) — the one
+    in-block pair enumerator of both blocking channels, batch and
+    incremental. For each boolean column f in `any_of`, a pair is kept only
+    if at least one of its two rows has f set (the incremental path's
+    "one side is new", the compact channel's "one side is punctuated").
+
+    Blocks of more than max_block rows are dropped whole by a hash
+    aggregate + semi join, cheaper and more skew-robust than a global
+    sort-based cap (cap_group_rows keeps the reference's exact-k cap);
+    max_block=None means the caller has capped them.
+
+    Enumeration is ONE groupBy over block_cols plus an in-row double
+    explode (round 6), in place of a self-join's two exchanges and hash
+    join; no aggregation buffer outgrows the block cap. Word count is
+    computed once per member row, so cross-width pairs are never
+    generated."""
+    if max_block is not None:
+        sizes = members.groupBy(*block_cols).agg(F.count("*").alias("__n"))
+        members = members.join(
+            sizes.where(F.col("__n") <= max_block).select(*block_cols),
+            block_cols,
+            "left_semi",
+        )
+    row = F.struct(
+        word_count(F.col(key_col)).alias("wg"),
+        F.col(key_col).alias("k"),
+        *any_of,
+    )
+    keep = (F.col("x.wg") == F.col("y.wg")) & (F.col("x.k") < F.col("y.k"))
+    for f in any_of:
+        keep = keep & (F.col(f"x.{f}") | F.col(f"y.{f}"))
+    return (
+        members.groupBy(*block_cols)
+        .agg(F.collect_list(row).alias("ms"))
+        .select(F.explode("ms").alias("x"), "ms")
+        .select("x", F.explode("ms").alias("y"))
+        .where(keep)
+        .select(F.col("x.k").alias("key_a"), F.col("y.k").alias("key_b"))
+    )
 
 
 def salted_block_pairs(
@@ -341,7 +349,8 @@ def salted_block_pairs(
     Output: (block_cols..., key_a, key_b) with key_a < key_b, exactly the
     pair set of a plain within-block self-join."""
     S = int(num_salts)
-    assert S >= 1
+    if S < 1:
+        raise ValueError(f"num_salts must be >= 1, got {num_salts}")
     g = F.pmod(F.xxhash64(F.col(key_col), F.lit(17)), F.lit(S)).cast("int")
     m = members.select(*block_cols, F.col(key_col)).withColumn("__g", g)
     left = m.select(
@@ -384,7 +393,8 @@ def salted_cross_pairs(
     Output: (block_cols..., left_key, right_key) — no ordering or
     self-pair filtering; the caller applies its own predicates."""
     S = int(num_salts)
-    assert S >= 1
+    if S < 1:
+        raise ValueError(f"num_salts must be >= 1, got {num_salts}")
     ga = F.pmod(F.xxhash64(F.col(left_key), F.lit(17)), F.lit(S)).cast("int")
     gb = F.pmod(F.xxhash64(F.col(right_key), F.lit(17)), F.lit(S)).cast("int")
     l = left.select(*block_cols, left_key).withColumn("__ga", ga).withColumn(

@@ -12,10 +12,12 @@
       8. report         cluster composition + metrics rows
 
 Shuffle budget (SURVEY.md §3.1 mapping): one shuffle at the surface
-groupBy, one at the LSH bucket self-join, two small joins for pair scoring,
-one per CC iteration (on the far smaller surface-key graph), one to map
-components back onto mentions. The KB join is broadcast. Head-key skew is
-defused by the LSH per-bucket cap plus AQE skew-join splitting.
+groupBy, one per blocking channel where blocking.block_pairs groups each
+block's members (LSH bucket, compact group), two small joins for pair
+scoring, one per CC iteration (on the far smaller surface-key graph), one
+to map components back onto mentions. The KB join is broadcast. Head-key
+skew is defused by the per-block cap in block_pairs plus AQE skew-join
+splitting.
 
 Materialization is checkpoint.StagePolicy's: resumable parquet stages
 with a checkpoint_dir, else a cached mention table and localCheckpoint
@@ -34,7 +36,11 @@ from dataclasses import dataclass, field, asdict
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .blocking import compact_key_pairs, lsh_candidate_pairs
+from .blocking import (
+    check_hot_bucket_mode,
+    compact_key_pairs,
+    lsh_candidate_pairs,
+)
 from .cc import connected_components
 from .checkpoint import StagePolicy, release
 from .extract import extract_text
@@ -104,6 +110,9 @@ class LinkConfig:
     # 0, forcing the distributed path end-to-end — the cc_full_pipeline
     # bench receipt) hash-min + pointer doubling runs on the cluster.
     cc_driver_max_edges: int = 1_000_000
+
+    def __post_init__(self) -> None:
+        check_hot_bucket_mode(self.hot_bucket_mode)
 
     def as_dict(self) -> dict:
         return asdict(self)

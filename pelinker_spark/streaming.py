@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .fsio import fs_exists
 from .mentions import generate_mentions
 from .synth import PAGE_SCHEMA
 
@@ -122,16 +123,6 @@ def streaming_first_seen(
     )
 
 
-def _fs_exists(spark: SparkSession, path: str) -> bool:
-    """Filesystem-agnostic existence check — shared fsio helper (os.path
-    only sees the driver's local disk; on a real cluster the state dirs
-    live on HDFS/S3, where a driver-local isdir is always False and would
-    silently skip scoring or the seen-key anti-join)."""
-    from .fsio import fs_exists
-
-    return fs_exists(spark, path)
-
-
 def _write_batch(
     df: DataFrame, path: str, batch_id: int,
     extra_partition_cols: tuple[str, ...] = (),
@@ -162,20 +153,22 @@ def incremental_link_batch(
     run_incremental_link's first-seen feed).
 
     Incremental blocking invariant: a candidate pair's LATER endpoint is
-    new exactly once, so joining the new keys' bucket/compact rows against
-    the accumulated state (old ∪ new) enumerates every pair at most once
-    across all batches, and — because bucket ids depend only on the key
-    string (blocking.lsh_buckets) — the union of per-batch pairs equals
-    the batch-mode pair set (parity-tested). Deviations from batch mode,
-    by construction of an append-only stream: (a) the LSH channel admits
-    every key (lsh_min_mentions is a cross-batch property); (b) the
-    hot-bucket cap applies to the ACCUMULATED bucket size at emission
-    time — pairs already emitted before a bucket went hot stay.
+    new exactly once, so enumerating the accumulated members (old ∪ new)
+    of each bucket/compact group this batch touches with
+    blocking.block_pairs, keeping pairs with at least one new side, emits
+    every pair in exactly one batch, and — because bucket ids depend only
+    on the key string (blocking.lsh_buckets) — the union of per-batch
+    pairs equals the batch-mode pair set (parity-tested). Deviations from
+    batch mode, by construction of an append-only stream: (a) the LSH
+    channel admits every key (lsh_min_mentions is a cross-batch
+    property); (b) the hot-bucket cap applies to the ACCUMULATED bucket
+    size at emission time — pairs already emitted before a bucket went
+    hot stay.
 
     State layout under out_dir (all batch_id-partitioned, idempotent):
       buckets/       (key, band, bh)      — accumulated LSH membership
       bucket_counts/ (band, bh, n)        — per-batch count increments
-      compact/       (key, ck, punct, wc) — accumulated compact forms
+      compact/       (key, ck, punct)     — accumulated compact forms
       group_counts/  (ck, n)              — per-batch count increments
       edges/         (key_a, key_b, jw, cos) — scored edges
 
@@ -187,9 +180,10 @@ def incremental_link_batch(
     (buckets/ and compact/ are partitioned by pmod(xxhash64(bucket-id),
     cfg.state_prefixes) — _pruned_state); and the surviving rows are
     further pruned through a semi join on THIS batch's exact bucket ids
-    before the pair join. Scan, shuffle and join are all proportional to
-    the batch's blocking neighborhood, not to total accumulated state
-    (receipts: tools/incremental_bench.py scanned-vs-history rows).
+    before pair enumeration. Scan, shuffle and enumeration are all
+    proportional to the batch's blocking neighborhood, not to total
+    accumulated state (receipts: tools/incremental_bench.py
+    scanned-vs-history rows).
     """
     from .checkpoint import release
     from .pipeline import LinkConfig, score_pairs
@@ -232,8 +226,7 @@ def _write_incremental_state(
     are aggregated in full for the running caps."""
     from .blocking import compact_form, has_nonkey_chars, lsh_buckets
 
-    k = int(getattr(cfg, "state_prefixes", 64))
-    wc = F.size(F.split(F.col("key"), " "))
+    k = cfg.state_prefixes
     nk_b = lsh_buckets(
         nk, "key", cfg.lsh_num_hashes, cfg.lsh_bands, cfg.lsh_rows
     ).withColumn("pfx", F.pmod(F.xxhash64("bh"), F.lit(k)))
@@ -241,7 +234,6 @@ def _write_incremental_state(
         "key",
         compact_form(F.col("key")).alias("ck"),
         has_nonkey_chars(F.col("key")).alias("punct"),
-        wc.alias("wc"),
     ).withColumn("pfx", F.pmod(F.xxhash64("ck"), F.lit(k)))
     _write_batch(nk_b, f"{out_dir}/buckets", batch_id, ("pfx",))
     _write_batch(
@@ -274,6 +266,26 @@ def _pruned_state(spark: SparkSession, path: str, batch_id: int) -> DataFrame:
     return spark.read.parquet(path).where(F.col("pfx").isin(touched))
 
 
+def _touched_blocks(
+    state: DataFrame, ids: DataFrame, block_cols: list[str], batch_id: int
+) -> DataFrame:
+    """Every accumulated membership row of the blocks in `ids` that THIS
+    batch's rows touch, with a `new` flag marking the batch's own rows.
+    The history is pruned to those blocks BEFORE pair enumeration, so the
+    full-history shuffle carries only pairable rows. No broadcast hint: a
+    "batch" can legitimately be a whole corpus (single-drop runs, the
+    parity test), making the touched set unbounded — AQE broadcasts it
+    when it is actually small."""
+    is_new = F.col("batch_id") == batch_id
+    touched = (
+        state.where(is_new)
+        .join(ids, block_cols, "left_semi")
+        .select(*block_cols)
+        .dropDuplicates()
+    )
+    return state.join(touched, block_cols, "left_semi").withColumn("new", is_new)
+
+
 def incremental_candidate_pairs(
     spark: SparkSession, out_dir: str, cfg, batch_id: int
 ) -> DataFrame:
@@ -283,6 +295,7 @@ def incremental_candidate_pairs(
     buckets, `compact_max_block` for compact groups — so a single-batch
     run over a whole corpus enumerates exactly the batch pipeline's pair
     set at lsh_min_mentions=1 (parity-tested at default caps)."""
+    from .blocking import block_pairs, salted_cross_pairs, word_count
     from .pipeline import prefilter_pairs
 
     # File-source pruning of the accumulated membership (VERDICT r3 #3):
@@ -297,68 +310,47 @@ def incremental_candidate_pairs(
     all_b = _pruned_state(spark, f"{out_dir}/buckets", batch_id)
     all_c = _pruned_state(spark, f"{out_dir}/compact", batch_id)
 
-    # hot caps from the running-count tables: accumulated size at emission
+    # caps from the running-count tables: accumulated size at emission
     # time = sum of per-batch increments up to now
-    bucket_sizes = (
-        spark.read.parquet(f"{out_dir}/bucket_counts")
-        .groupBy("band", "bh")
-        .agg(F.sum("n").alias("bn"))
-    )
-    ok_buckets = bucket_sizes.where(F.col("bn") <= cfg.max_block).select(
-        "band", "bh"
-    )
-    nb = all_b.where(F.col("batch_id") == batch_id).join(
-        ok_buckets, ["band", "bh"], "left_semi"
-    )
-    # prune history to buckets this batch actually touched BEFORE the
-    # pair join, so the full-history shuffle carries only joinable rows.
-    # No broadcast hint: a "batch" can legitimately be a whole corpus
-    # (single-drop runs, the parity test), making this set unbounded —
-    # AQE broadcasts it when it is actually small
-    ob = all_b.join(
-        nb.select("band", "bh").dropDuplicates(), ["band", "bh"], "left_semi"
-    )
-    pairs_lsh = (
-        nb.select("band", "bh", F.col("key").alias("k1"))
-        .join(ob.select("band", "bh", F.col("key").alias("k2")), ["band", "bh"])
-        .where(F.col("k1") != F.col("k2"))
-        .select(
-            F.least("k1", "k2").alias("key_a"),
-            F.greatest("k1", "k2").alias("key_b"),
+    def sizes(table: str, block_cols: list[str]) -> DataFrame:
+        return (
+            spark.read.parquet(f"{out_dir}/{table}")
+            .groupBy(*block_cols)
+            .agg(F.sum("n").alias("n"))
         )
-        .where(
-            F.size(F.split(F.col("key_a"), " "))
-            == F.size(F.split(F.col("key_b"), " "))
-        )
+
+    bucket = ["band", "bh"]
+    bucket_sizes = sizes("bucket_counts", bucket)
+    cold = _touched_blocks(
+        all_b,
+        bucket_sizes.where(F.col("n") <= cfg.max_block).select(*bucket),
+        bucket,
+        batch_id,
     )
-    if getattr(cfg, "hot_bucket_mode", "drop") == "salt":
+    pairs = block_pairs(cold, bucket, any_of=("new",))
+    if cfg.hot_bucket_mode == "salt":
         # salted skew path (north rule; parity with the batch pipeline's
         # hot_bucket_mode="salt"): buckets whose ACCUMULATED size at
         # emission time is in (max_block, stop] keep all (new × history)
         # pairs, spread over lsh_hot_salts² shuffle cells per bucket
-        from .blocking import salted_cross_pairs
-
         stop = (
             cfg.lsh_stop_block
             if cfg.lsh_stop_block is not None
             else cfg.max_block * 40
         )
-        hot_ids = bucket_sizes.where(
-            (F.col("bn") > cfg.max_block) & (F.col("bn") <= stop)
-        ).select("band", "bh")
-        nb_hot = all_b.where(F.col("batch_id") == batch_id).join(
-            hot_ids, ["band", "bh"], "left_semi"
-        )
-        ob_hot = all_b.join(
-            nb_hot.select("band", "bh").dropDuplicates(),
-            ["band", "bh"],
-            "left_semi",
+        hot = _touched_blocks(
+            all_b,
+            bucket_sizes.where(
+                (F.col("n") > cfg.max_block) & (F.col("n") <= stop)
+            ).select(*bucket),
+            bucket,
+            batch_id,
         )
         hot_pairs = (
             salted_cross_pairs(
-                nb_hot.select("band", "bh", F.col("key").alias("k1")),
-                ob_hot.select("band", "bh", F.col("key").alias("k2")),
-                ["band", "bh"],
+                hot.where(F.col("new")).select(*bucket, F.col("key").alias("k1")),
+                hot.select(*bucket, F.col("key").alias("k2")),
+                bucket,
                 "k1",
                 "k2",
                 cfg.lsh_hot_salts,
@@ -368,44 +360,22 @@ def incremental_candidate_pairs(
                 F.least("k1", "k2").alias("key_a"),
                 F.greatest("k1", "k2").alias("key_b"),
             )
-            .where(
-                F.size(F.split(F.col("key_a"), " "))
-                == F.size(F.split(F.col("key_b"), " "))
-            )
+            .where(word_count(F.col("key_a")) == word_count(F.col("key_b")))
         )
-        pairs_lsh = pairs_lsh.unionByName(hot_pairs)
+        pairs = pairs.unionByName(hot_pairs)
 
-    ok_groups = (
-        spark.read.parquet(f"{out_dir}/group_counts")
-        .groupBy("ck")
-        .agg(F.sum("n").alias("gn"))
-        .where(F.col("gn") <= cfg.compact_max_block)
-        .select("ck")
+    groups = _touched_blocks(
+        all_c,
+        sizes("group_counts", ["ck"])
+        .where(F.col("n") <= cfg.compact_max_block)
+        .select("ck"),
+        ["ck"],
+        batch_id,
     )
-    ncp = all_c.where(F.col("batch_id") == batch_id).join(
-        ok_groups, "ck", "left_semi"
+    pairs = pairs.unionByName(
+        block_pairs(groups, ["ck"], any_of=("new", "punct"))
     )
-    ocp = all_c.join(ncp.select("ck").dropDuplicates(), "ck", "left_semi")
-    pairs_c = (
-        ncp.select("ck", F.col("key").alias("k1"), F.col("punct").alias("p1"),
-                   F.col("wc").alias("w1"))
-        .join(
-            ocp.select("ck", F.col("key").alias("k2"),
-                       F.col("punct").alias("p2"), F.col("wc").alias("w2")),
-            "ck",
-        )
-        .where((F.col("k1") != F.col("k2")) & (F.col("p1") | F.col("p2")))
-        .where(F.col("w1") == F.col("w2"))
-        .select(
-            F.least("k1", "k2").alias("key_a"),
-            F.greatest("k1", "k2").alias("key_b"),
-        )
-    )
-
-    return (
-        prefilter_pairs(pairs_lsh.unionByName(pairs_c))
-        .dropDuplicates(["key_a", "key_b"])
-    )
+    return prefilter_pairs(pairs).dropDuplicates(["key_a", "key_b"])
 
 
 # --------------------------------------------------- state compaction
@@ -435,7 +405,7 @@ def compacted_upto(spark: SparkSession, out_dir: str) -> int:
     from .fsio import fs_read_text
 
     marker = f"{out_dir}/{_COMPACT_MARKER}"
-    if not _fs_exists(spark, marker):
+    if not fs_exists(spark, marker):
         return BASE_BATCH - 1
     return int(json.loads(fs_read_text(spark, marker))["upto"])
 
@@ -483,7 +453,7 @@ def recover_compaction(spark: SparkSession, out_dir: str) -> bool:
     from .fsio import fs_delete, fs_read_text, fs_write_text_atomic
 
     pending = f"{out_dir}/{_PENDING_MARKER}"
-    if not _fs_exists(spark, pending):
+    if not fs_exists(spark, pending):
         return False
     st = json.loads(fs_read_text(spark, pending))
     upto = int(st["upto"])
@@ -492,7 +462,7 @@ def recover_compaction(spark: SparkSession, out_dir: str) -> bool:
     if edges_upto > BASE_BATCH:
         caps["edges"] = edges_upto
     for table, cap in caps.items():
-        if _fs_exists(spark, f"{out_dir}/.compact_tmp/{table}"):
+        if fs_exists(spark, f"{out_dir}/.compact_tmp/{table}"):
             _swap_in_base(spark, out_dir, table, cap)
         else:
             for d in _batch_dirs_leq(spark, f"{out_dir}/{table}", cap):
@@ -582,7 +552,7 @@ def compact_incremental_state(
 
     # edges cap: never fold a batch the persisted CC map hasn't absorbed
     cc_marker = f"{out_dir}/{_CC_STATE}/{_CC_MARKER}"
-    if _fs_exists(spark, cc_marker):
+    if fs_exists(spark, cc_marker):
         cc_upto = int(json.loads(fs_read_text(spark, cc_marker))["upto"])
         edges_upto = min(upto_batch_id, cc_upto)
     else:
@@ -612,9 +582,7 @@ def compact_incremental_state(
             # edges carry no pfx column (they are never prefix-pruned;
             # CC reads them in full) — cap file count at the same knob
             folded = src.drop("batch_id")
-            writer = folded.repartition(
-                int(getattr(cfg, "state_prefixes", 64))
-            ).write
+            writer = folded.repartition(cfg.state_prefixes).write
         else:
             # membership rows are immutable; one file per pfx dir keeps
             # the post-compaction file count == cfg.state_prefixes
@@ -804,7 +772,7 @@ def incremental_components(spark: SparkSession, out_dir: str) -> DataFrame:
 
     marker = f"{state}/{_CC_MARKER}"
     old_map, upto = None, None
-    if _fs_exists(spark, marker):
+    if fs_exists(spark, marker):
         st = json.loads(fs_read_text(spark, marker))
         old_map, upto = spark.read.parquet(f"{state}/{st['dir']}"), st["upto"]
 
@@ -893,7 +861,7 @@ def run_incremental_link(
     )
     q1.awaitTermination()
 
-    if not _fs_exists(spark, f"{out_dir}/mentions"):
+    if not fs_exists(spark, f"{out_dir}/mentions"):
         return  # empty first drop: nothing ingested, nothing to score
 
     # a previous run may have died mid-compaction; finish the swap before
@@ -922,7 +890,7 @@ def run_incremental_link(
 
     def score_new(batch_df: DataFrame, batch_id: int) -> None:
         nk = batch_df.select("key").dropDuplicates(["key"])
-        if _fs_exists(spark, f"{out_dir}/buckets"):
+        if fs_exists(spark, f"{out_dir}/buckets"):
             # every key has exactly ONE band-0 row, so the band filter
             # makes this a one-row-per-seen-key, key-column-pruned scan
             # (row-group stats prune the other bands) instead of a

@@ -5,17 +5,23 @@ salted_block_pairs spreads a block's quadratic pair enumeration over
 S(S+1)/2 shuffle cells (triangle partitioning); salted_cross_pairs is the
 asymmetric probe-vs-history twin used by the incremental path. Both must
 produce EXACTLY the plain self-join's pair set for every salt count —
-salting redistributes work, never changes results."""
+salting redistributes work, never changes results. block_pairs, the
+cold-block enumerator, is held to a plain-Python enumeration the same
+way."""
 
 import itertools
+import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from pelinker_spark.blocking import (
+    block_pairs,
     lsh_candidate_pairs,
     salted_block_pairs,
     salted_cross_pairs,
 )
+from pelinker_spark.pipeline import LinkConfig
 
 
 def _naive_pairs(keys):
@@ -48,6 +54,70 @@ def test_salted_block_pairs_equals_naive(spark):
             for r in salted_block_pairs(df, ["blk"], "key", s).collect()
         }
         assert got == expected, f"salt count {s}"
+
+
+def test_block_pairs_equals_naive(spark):
+    """block_pairs vs a plain-Python enumeration on a seeded random
+    membership table: blocks of exactly max_block, max_block + 1 and 1
+    rows (the cap is inclusive), mixed word counts, and every any_of
+    shape the call sites use."""
+    rng = random.Random(7)
+    cap = 6
+    words = ["al", "bo", "cy", "di", "ed"]
+    rows = []
+    for blk, n in {"at": cap, "over": cap + 1, "one": 1, "mid": 4}.items():
+        for i in range(n):
+            key = " ".join(rng.sample(words, rng.randint(1, 2))) + f" {blk}{i}"
+            rows.append((blk, key, rng.random() < 0.4, rng.random() < 0.5))
+    df = spark.createDataFrame(
+        rows, "blk string, key string, new boolean, punct boolean"
+    )
+
+    def naive(any_of):
+        out = set()
+        for blk in {r[0] for r in rows}:
+            members = [r for r in rows if r[0] == blk]
+            if len(members) > cap:
+                continue
+            for x, y in itertools.permutations(members, 2):
+                flags = {"new": (x[2], y[2]), "punct": (x[3], y[3])}
+                if (
+                    x[1] < y[1]
+                    and len(x[1].split(" ")) == len(y[1].split(" "))
+                    and all(any(flags[f]) for f in any_of)
+                ):
+                    out.add((x[1], y[1]))
+        return out
+
+    for any_of in ((), ("punct",), ("new", "punct")):
+        got = block_pairs(df, ["blk"], max_block=cap, any_of=any_of).collect()
+        assert {(r.key_a, r.key_b) for r in got} == naive(any_of), any_of
+        assert len(got) == len(naive(any_of)), "no duplicate pairs"
+        assert naive(any_of), any_of
+    # the inclusive cap: the max_block-row block pairs, the one above drops
+    all_pairs = {
+        (r.key_a, r.key_b) for r in block_pairs(df, ["blk"], max_block=cap).collect()
+    }
+    assert any(" at" in a for a, _ in all_pairs)
+    assert not any(" over" in a for a, _ in all_pairs)
+
+
+def test_blocking_arguments_raise_value_error(spark):
+    """Argument checks are exceptions (python -O strips asserts), and an
+    unknown hot_bucket_mode is rejected where LinkConfig is built, so the
+    batch and incremental paths share one check."""
+    with pytest.raises(ValueError, match="hot_bucket_mode"):
+        LinkConfig(hot_bucket_mode="salty")
+    surfaces = spark.createDataFrame([("ab",), ("abc",)], "key string")
+    with pytest.raises(ValueError, match="hot_bucket_mode"):
+        lsh_candidate_pairs(surfaces, hot_bucket_mode="salty")
+    with pytest.raises(ValueError, match="num_hashes"):
+        lsh_candidate_pairs(surfaces, num_hashes=4, bands=4, rows=3)
+    df = spark.createDataFrame([("b", "x")], "blk string, key string")
+    with pytest.raises(ValueError, match="num_salts"):
+        salted_block_pairs(df, ["blk"], "key", 0)
+    with pytest.raises(ValueError, match="num_salts"):
+        salted_cross_pairs(df, df, ["blk"], "key", "key", 0)
 
 
 def test_salted_cross_pairs_equals_plain_join(spark):
